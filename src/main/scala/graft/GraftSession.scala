@@ -1,76 +1,38 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.SparkConf
+import org.apache.spark.sql.SparkSession
 
-/** SparkSession factory tuned for the engine.
+/** The one SparkSession factory: every main (the CLI, the oracle dump,
+  * the golden regeneration, the plan dump, the scale-up clone, the
+  * streaming bench) and the test session build through it.
   *
   * Mirrors the role of the reference's `Session`
   * (reference: src/gentropy/common/session.py:16-59) without the Hail
-  * config. Designed for a real cluster: AQE on (runtime coalesce + skew
-  * join), Kryo, and a shuffle-partition count sized by the caller (32 in
-  * local mode; on a 1000-executor cluster this would be set to
-  * ~2-3x total cores via --conf).
+  * config. A key is set only when spark-submit (`--master`, `--conf`)
+  * or a `-Dspark.*` system property has not already set it, so cluster
+  * deployments tune the session from the command line. The band-join
+  * rewrite is opt-in the same way:
+  * `--conf spark.sql.extensions=graft.plans.GraftExtensions`.
   */
 object GraftSession {
 
-  def builder(master: String = "local[*]", shufflePartitions: Int = 32): SparkSession.Builder =
-    SparkSession
-      .builder()
-      .master(master)
-      .appName("graft")
-      // band-join optimizer rule (plans/BandJoin.scala): rewrites
-      // equi-free range joins into band-bucketed equi-joins
-      .withExtensions(new graft.plans.GraftExtensions)
-      .config("spark.sql.shuffle.partitions", shufflePartitions.toString)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      // AQE coalescing reasons in shuffle BYTES, but several operators
-      // here are CPU-dense per byte (window sorts + logsumexp over
-      // small compressed string/struct rows, per-group array kernels):
-      // with the default 1m floor a few-MB exchange coalesces to 1-3
-      // tasks and the downstream stage runs serial (measured: the
-      // q_gx_coloc window+agg stage at 3 tasks, wall ≈ cpu ≈ 2 s; the
-      // fine-mapper hit the same trap and pins an explicit repartition
-      // — DistributedFineMapper.bundleLoci). A 64k floor restores
-      // parallelism on exactly those small CPU-dense exchanges.
-      // Production blast radius (r17, corrected): with
-      // coalescePartitions.parallelismFirst=true (the default) AQE
-      // targets max(totalShuffleBytes / defaultParallelism,
-      // minPartitionSize) — NOT the 64m advisory target — so this
-      // floor changes behaviour on any exchange totalling under
-      // ~(cluster parallelism × 1 MB): those coalesce toward
-      // parallelism-many tasks instead of 1 MB-sized ones. That is the
-      // intended trade (more tasks on small CPU-dense exchanges);
-      // exchanges past that band are governed by totalBytes /
-      // parallelism either way and never see the floor. Override via
-      // --conf for deployments that prefer the stock 1m floor.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-      .config("spark.sql.session.timeZone", "UTC")
-      // the driver's events table stores ns timestamps, which Spark 4
-      // otherwise refuses to read
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
+  /** Effective value of every key the factory manages: the preset
+    * `conf` wins, then the environment (`SPARK_MASTER`,
+    * `SPARK_SHUFFLE_PARTITIONS`), then the default. */
+  def resolve(conf: SparkConf, env: Map[String, String]): Seq[(String, String)] = Seq(
+    "spark.master" -> env.getOrElse("SPARK_MASTER", "local[*]"),
+    "spark.sql.shuffle.partitions" -> env.getOrElse("SPARK_SHUFFLE_PARTITIONS", "32"),
+    // the test data's events table stores ns timestamps, which Spark 4
+    // otherwise refuses to read
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    "spark.sql.session.timeZone" -> "UTC"
+  ).map { case (k, v) => k -> conf.get(k, v) }
 
-  def getOrCreate(): SparkSession = {
-    val s = builder().getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
-}
-
-/** Loaders for the driver-generated TPC-H-ish test tables (TESTDATA.md).
-  *
-  * One `spark.read.parquet` per table — Catalyst pushes filters and
-  * prunes columns into these scans, so callers should NOT cache or
-  * materialise here.
-  */
-object Tables {
-  val names: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
-
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** A builder carrying the resolved settings; callers may override
+    * any of them with further builder calls before `getOrCreate()`. */
+  def builder(appName: String): SparkSession.Builder =
+    resolve(new SparkConf(), sys.env).foldLeft(SparkSession.builder().appName(appName)) {
+      case (b, (k, v)) => b.config(k, v)
+    }
 }

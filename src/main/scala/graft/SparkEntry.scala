@@ -159,20 +159,5 @@ object SparkEntry {
     "q_mm_resize" -> (Q.multimodalResize _),
     "q_mm_frames" -> (Q.multimodalFrames _))
 
-  /** Rehearsal-only scaled-workload variants — NOT part of the driver
-    * contract (no oracles; Verify never runs them). graft.Bench
-    * resolves these names too, so the 10x/100x scale rehearsal
-    * (BENCH_sf1.json) can use the fork/rep harness for operators whose
-    * registered synthesis pins the group space with moduli. */
-  def rehearsalQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "r_gx_ld_clump" -> (Q.ldClumpScaled _),
-    "r_gx_coloc_classic" -> (Q.colocClassicScaled _),
-    "r_gx_ecaviar_classic" -> (Q.ecaviarClassicScaled _),
-    "r_gx_rsid_gnomad_map" -> (Q.rsidGnomadMapScaled _),
-    "r_gx_finemap" -> (Q.finemapScaled _),
-    "r_gx_ancestry_agg" -> (Q.ancestryAggScaled _),
-    "r_gx_study_deconvolution" -> (Q.studyDeconvolutionScaled _),
-    "r_ml_l2g_gold_standard" -> (Q.l2gGoldStandardScaled _))
-
   def oracleSql: Map[String, String] = Oracles.all
 }

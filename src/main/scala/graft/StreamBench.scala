@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.{col, lit}
 import org.apache.spark.sql.streaming.Trigger
@@ -49,15 +48,12 @@ import org.apache.spark.sql.streaming.Trigger
   * engine's own progress events (stateOperators.numRowsTotal /
   * memoryUsedBytes), maxed over the run.
   *
-  * Recording is canary-gated ([[MachineCanary]], same protocol as
-  * the bench suite): the pinned CPU probe must run within 25% of its
-  * fresh-box cost (quiesce-and-retry otherwise), and the final ratio
-  * is embedded in the artifact.
-  *
   * Prints one JSON line:
   * {"stream_bench":{workload:{rows_in,rows_out,sec,rows_per_sec,
-  * state_rows_max,state_mb_max,batches,...}},"scale":N,"docs":M,
-  * "canary":{...}}
+  * state_rows_max,state_mb_max,batches,...}},"scale":N,"docs":M}
+  *
+  * The session comes from [[GraftSession]]: `SPARK_MASTER` and
+  * `SPARK_SHUFFLE_PARTITIONS` (the state-store partition count) size it.
   */
 object StreamBench {
 
@@ -70,19 +66,10 @@ object StreamBench {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val factor = args.lift(1).map(_.toInt).getOrElse(10)
     val batches = args.lift(2).map(_.toInt).getOrElse(25)
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")}]")
-      .appName("graft-stream-bench")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "16"))
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder("graft-stream-bench").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-
-    val canaryRatio = MachineCanary.gatedRatio(spark)
 
     val docs0 = spark.read.parquet(s"$sfDir/documents.parquet")
       .select("doc_id", "text")
@@ -401,9 +388,7 @@ object StreamBench {
     val js = (Seq(r1, r2, r3, r3b, r3c, r4).filter(_._4 >= 0).map(entry(_)) ++
       (if (r5._1._4 >= 0) Seq(entry(r5._1, r5._2)) else Nil))
       .mkString("{", ",", "}")
-    println(s"""{"stream_bench":$js,"scale":$factor,"docs":$total,""" +
-      f""""canary":{"ref_sec":${MachineCanary.refSec}%.2f,""" +
-      f""""ratio":$canaryRatio%.2f}}""")
+    println(s"""{"stream_bench":$js,"scale":$factor,"docs":$total}""")
     spark.stop()
   }
 }

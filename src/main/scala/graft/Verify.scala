@@ -1,19 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder("graft-verify").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // optional filter (comma-separated names) for focused re-checks;
@@ -63,8 +55,8 @@ object Verify {
               .toDF("__verify_error")
               .coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
           } else if (!ok)
-            System.err.println(s"[verify] $name golden differs (UNENFORCED" +
-              s" at $cpus cpus): expected $exp got $got")
+            System.err.println(s"[verify] $name golden differs " +
+              s"(UNENFORCED): expected $exp got $got")
         }
       }
       catch { case e: Throwable =>

@@ -439,9 +439,11 @@ object L2GFeatures {
       .na.fill(0.0)
   }
 
-  /** A/B twin of [[featureMatrix]] kept for measurement: the r12 shape
-    * (one nullable struct slot per family, merged by first(ignoreNulls)).
-    * Plans as Sort + SortAggregate — struct buffers are immutable. */
+  /** The r12 merge shape, kept as a test reference: one nullable struct
+    * slot per family, merged by first(ignoreNulls). [[featureMatrix]]
+    * must produce the same values, and the plan audit uses this as its
+    * known Sort + SortAggregate fixture (struct buffers are immutable).
+    * No production path calls it. */
   def featureMatrixStruct(features: Seq[DataFrame]): DataFrame = {
     import org.apache.spark.sql.types.{StructField, StructType}
     val keys = Seq("studyLocusId", "geneId")
@@ -533,8 +535,7 @@ object L2GFeatures {
     * full subtree (the r16 q_ml_l2g_features plan carried 51 embedded
     * cache subtrees over 1,856 lines; planning + codegen were ~3-4 s
     * of its ~6 s recorded cost). `GRAFT_PLAN_TRUNCATE=off` replays the
-    * r16 InMemoryRelation shape (A/B measurement hook, like
-    * GRAFT_L2G_MERGE). */
+    * r16 InMemoryRelation shape (A/B measurement hook). */
   private[graft] def persistSharedFrame(cache: graft.core.CacheHandle,
                                         df: DataFrame): DataFrame =
     graft.core.CacheHandle.persistMaybeTruncated(cache, df)
@@ -657,11 +658,6 @@ object L2GFeatures {
     // racing a still-uncached parent would recompute its partitions
     // redundantly (measured 2x end-to-end at sf0.1)
     if (persistShared) cache.materialize()
-    // -Dgraft.l2g.merge=struct / GRAFT_L2G_MERGE=struct replays the
-    // r12 merge shape (A/B measurement hook)
-    if (sys.props.get("graft.l2g.merge")
-        .orElse(sys.env.get("GRAFT_L2G_MERGE")).contains("struct"))
-      featureMatrixStruct(frames.toSeq)
-    else featureMatrix(frames.toSeq)
+    featureMatrix(frames.toSeq)
   }
 }

@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * (key, salt) — the hot key's rows now spread over `salts` reducers at
   * the cost of a `salts`× blow-up of the (small) dimension side.
   *
-  * AQE's skew-join handling (on by default in [[graft.GraftSession]])
+  * AQE's skew-join handling (on by default in Spark)
   * covers sort-merge joins adaptively; explicit salting remains the
   * tool when AQE cannot see the skew (first shuffle of a stage, skew
   * materialising only after filters) or for deterministic plan shapes.

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DoubleType, FloatType}
 
@@ -94,13 +94,7 @@ object Goldens {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val tag = new java.io.File(sfDir).getName
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder("graft-goldens").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val out = java.nio.file.Files.createTempDirectory("goldens").toString
     expected.keys.toSeq.sorted.foreach { name =>

@@ -230,7 +230,7 @@ object Steps {
 
     Step("l2g_feature_matrix",
       "Locus-to-gene feature matrix (distance/coloc/VEP/other families)",
-      (s, a) => write(
+      (s, a) => writeReleasing(a("out"))(h =>
         L2GFeatures.computeFeatureMatrix(L2GFeatures.Inputs(
           credSets = read(s, a("credible_sets")),
           variantIndex = a.get("variant_index").map(read(s, _)),
@@ -238,7 +238,7 @@ object Steps {
           distances = a.get("distances").map(read(s, _)),
           coloc = a.get("colocalisation").map(read(s, _)),
           studyIndex = a.get("study_index").map(read(s, _)),
-          studyLoci = a.get("study_loci").map(read(s, _)))), a("out"))),
+          studyLoci = a.get("study_loci").map(read(s, _))), cache = h))),
 
     Step("l2g_gold_standard",
       "Gold-standard labels: curation + negatives, overlap-dedup, interaction cleanup",
@@ -1046,22 +1046,8 @@ object GraftCli {
       println(Steps.usage)
       return
     }
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_SHUFFLE_PARTITIONS", "32"))
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .appName(s"graft-${args.head}")
-      .getOrCreate()
-    // SPARK_GRAFT_PROFILE=1: dump the step's costliest Spark stages
-    // (executor-CPU-ranked) to stderr on exit — the shared profiler,
-    // for attributing step-cost differences between CLI, chain, and
-    // bench contexts.
-    val profiler = graft.core.StageProfiler.ifEnabled(spark, "cliprofile")
+    val spark = graft.GraftSession.builder(s"graft-${args.head}").getOrCreate()
     try Steps.runFromArgs(spark, args.toSeq)
-    finally {
-      profiler.foreach(_.dump(args.head))
-      spark.stop()
-    }
+    finally spark.stop()
   }
 }

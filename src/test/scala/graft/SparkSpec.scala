@@ -6,7 +6,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared deterministic local session for specs, mirroring the
   * reference's test harness (reference: src/utils/spark.py:10-39 —
-  * local master, shuffle.partitions=1).
+  * local master, shuffle.partitions=1). Built through [[GraftSession]]
+  * (UTC, nanosAsLong) with the master and partitions pinned here.
   */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -17,13 +18,10 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession
-      .builder()
+    val s = GraftSession
+      .builder("graft-test")
       .master("local[2]")
-      .appName("graft-test")
       .config("spark.sql.shuffle.partitions", "1")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")

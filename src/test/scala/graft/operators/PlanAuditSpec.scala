@@ -282,7 +282,12 @@ class PlanAuditSpec extends SparkSpec {
     // maxPartitionBytes so the small test files are not packed into a
     // single split (openCost packing would hide the layout).
     val dir = java.nio.file.Files.createTempDirectory("spread_guard").toString
-    val docs = (1L to 64L)
+    // at least two rows per core, range-partitioned below, so the
+    // pre-partitioned leg writes a non-empty file for every one of
+    // defaultParallelism partitions on any core count (a hash
+    // repartition of this few rows can leave partitions empty)
+    val nDocs = math.max(64L, 2L * spark.sparkContext.defaultParallelism)
+    val docs = (1L to nDocs)
       .map(i => (i, s"alpha beta corpus document number $i", "en", "web"))
       .toDF("doc_id", "text", "lang", "source")
     try {
@@ -296,7 +301,7 @@ class PlanAuditSpec extends SparkSpec {
         assert(p1.contains("REPARTITION_BY_NUM"),
           s"spread() missing on a single-partition input:\n$p1")
         // pre-partitioned layout (>= defaultParallelism files): no-op
-        docs.repartition(spark.sparkContext.defaultParallelism,
+        docs.repartitionByRange(spark.sparkContext.defaultParallelism,
             col("doc_id"))
           .write.mode("overwrite").parquet(s"$dir/documents.parquet")
         val p2 = plan(graft.queries.Q.decontamination(spark, dir))

@@ -469,6 +469,34 @@ class StepsSpec extends SparkSpec {
     assert(pips("v04") + pips("v05") + pips("v06") > 0.8, s"pips=$pips")
   }
 
+  test("l2g_feature_matrix step releases every RDD it persisted or checkpointed") {
+    val cred = tmp("l2g_release_cred")
+    (1 to 6).map(i => (s"sl$i", s"s${i % 2}", "1", s"1_${i * 1000}_A_T", i * 1000))
+      .toDF("studyLocusId", "studyId", "chromosome", "variantId", "position")
+      .withColumn("locus", array(
+        struct(col("variantId"), lit(0.8).as("posteriorProbability")),
+        struct(concat(col("variantId"), lit("x")).as("variantId"),
+          lit(0.2).as("posteriorProbability"))))
+      .write.parquet(cred)
+    val distances = tmp("l2g_release_distances")
+    (1 to 6).map(i => (s"1_${i * 1000}_A_T", s"g$i", i * 500L))
+      .toDF("variantId", "geneId", "distanceFromTss").write.parquet(distances)
+    // genes make the gene-count family consume the step's shared
+    // credible-set frame, so the frame stays in the written plan
+    val genes = tmp("l2g_release_genes")
+    (1 to 6).map(i => (s"g$i", "protein_coding", "1", i * 1000L))
+      .toDF("id", "biotype", "chromosome", "tss").write.parquet(genes)
+    val out = tmp("l2g_release_out")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    Steps.runFromArgs(spark, Seq("l2g_feature_matrix",
+      s"credible_sets=$cred", s"distances=$distances", s"gene_index=$genes",
+      s"out=$out"))
+    val held = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(held.isEmpty, s"RDDs still persisted after the step: $held")
+    // every locus window holds all six genes
+    assert(spark.read.parquet(out).count() == 36)
+  }
+
   test("genetics lifecycle chain: sumstats -> clump -> LD -> PICS -> coloc -> L2G score") {
     import StepsSpecFixtures._
     // 40 independent GWAS loci (s1) + one eQTL locus (s2) overlapping
